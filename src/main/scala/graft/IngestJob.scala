@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 import graft.ingest.RawReader
 import graft.ops.{DistrictExtract, FuzzyMatch, Normalize, SchemaAlign}
@@ -22,6 +23,13 @@ import graft.schema.ContestSchema
   * Writes parquet partitioned by election_date: at 100 TB the contest
   * store is naturally pruned by election, and every downstream query
   * filtering on election_date skips irrelevant partitions entirely.
+  *
+  * One scan, one Spark job: [[RawReader]] reads the CSV string-typed
+  * from the driver-read headers (no inference pass), [[SchemaAlign]]
+  * types the columns, and the returned row count is an `Observation`
+  * on the write itself rather than a second run of the pipeline. The
+  * only other job is the district gate's probe, and only when the
+  * input carries a `district` column.
   */
 object IngestJob {
 
@@ -73,13 +81,15 @@ object IngestJob {
     val mapping = schema.fieldNames.toSeq.flatMap(c => merged.get(c).map(_ -> c))
     val normalized = Normalize(raw, mapping)
     val extracted = DistrictExtract.withGate(normalized)
-    val aligned = SchemaAlign(extracted, schema)
-    aligned.write
+    // this run's row count, taken by the write job as the rows pass
+    // (a store read-back would report the cumulative count under append)
+    val landed = Observation()
+    SchemaAlign(extracted, schema)
+      .observe(landed, count(lit(1)).as("rows"))
+      .write
       .mode("append")
       .partitionBy("election_date")
       .parquet(outPath)
-    // this run's row count (re-runs the narrow pipeline; a full store
-    // read-back would report the CUMULATIVE count under append mode)
-    aligned.count()
+    landed.get("rows").asInstanceOf[Long]
   }
 }

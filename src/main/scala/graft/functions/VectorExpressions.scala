@@ -74,12 +74,18 @@ case class DotProduct(left: Expression, right: Expression) extends VectorBinaryE
 /** Integer-quantized dot(a, b): Σ round(aᵢ·1e7)·round(bᵢ·1e7) as a
   * LONG — the exact, order-independent form the oracle comparisons
   * use, computed in one codegen'd loop instead of
-  * transform+zip_with+aggregate. */
+  * transform+zip_with+aggregate. `round` is half away from zero, as in
+  * Spark SQL's and DuckDB's `round` (the `round(x * 10000000)` mirrors
+  * in the oracle SQL): `Math.round` alone would take −x.5 toward +∞,
+  * so negatives round their magnitude. */
 case class QuantizedDot(left: Expression, right: Expression) extends VectorBinaryExpression {
   override def dataType: DataType = LongType
   override def prettyName: String = "vec_qdot"
 
-  @inline private def q(f: Float): Long = Math.round(f.toDouble * 1e7d)
+  @inline private def q(f: Float): Long = {
+    val v = f.toDouble * 1e7d
+    if (v < 0d) -Math.round(-v) else Math.round(v)
+  }
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
@@ -99,12 +105,16 @@ case class QuantizedDot(left: Expression, right: Expression) extends VectorBinar
       val n = ctx.freshName("n")
       val i = ctx.freshName("i")
       val acc = ctx.freshName("acc")
+      val a = ctx.freshName("a")
+      val b = ctx.freshName("b")
       s"""
          |int $n = java.lang.Math.min($x.numElements(), $y.numElements());
          |long $acc = 0L;
          |for (int $i = 0; $i < $n; $i++) {
-         |  $acc += java.lang.Math.round(((double) $x.getFloat($i)) * 1.0E7d)
-         |        * java.lang.Math.round(((double) $y.getFloat($i)) * 1.0E7d);
+         |  double $a = ((double) $x.getFloat($i)) * 1.0E7d;
+         |  double $b = ((double) $y.getFloat($i)) * 1.0E7d;
+         |  $acc += ($a < 0.0d ? -java.lang.Math.round(-$a) : java.lang.Math.round($a))
+         |        * ($b < 0.0d ? -java.lang.Math.round(-$b) : java.lang.Math.round($b));
          |}
          |${ev.value} = $acc;
        """.stripMargin

@@ -37,10 +37,14 @@ object DistrictExtract {
     "(?i)DISTRICT (IX|I?V|V?I{1,3})\\b",
   )
 
-  /** F2 gate: pandas-truthiness "any" over the district column. */
+  /** F2 gate: pandas-truthiness "any" over the district column, read
+    * as text so a typed (e.g. integer) district gates instead of
+    * failing the `""` comparison. */
   def shouldExtract(df: DataFrame): Boolean =
-    !df.columns.contains("district") ||
-      df.filter(col("district").isNotNull && col("district") =!= "").isEmpty
+    !df.columns.contains("district") || {
+      val d = col("district").cast("string")
+      df.filter(d.isNotNull && d =!= "").isEmpty
+    }
 
   /** The unconditional 3-pattern pipeline. */
   def apply(df: DataFrame): DataFrame = {

@@ -11,9 +11,9 @@ import org.apache.spark.sql.functions._
   *  - value names an existing column  → rename (P2) + keep (P1);
   *  - value is not a column           → inject as a literal for every
   *    row (P3), parsed as a date when it targets `election_date` (P4,
-  *    `pd.to_datetime(i)` at :159-160 — canonicalized here to
-  *    MM/dd/yyyy with ISO fallback, via `try_to_date` so unparseable
-  *    constants yield null instead of an ANSI error).
+  *    `pd.to_datetime(i)` at :159-160 — MM/dd/yyyy or ISO through
+  *    [[SchemaAlign.date]], the rule string source columns get too,
+  *    so unparseable constants yield null instead of an ANSI error).
   *
   * Pure projection: Catalyst collapses it into the scan, so unmapped
   * source columns are never read (column pruning does P1 for free).
@@ -25,8 +25,7 @@ object Normalize {
     val withConsts = colnames.foldLeft(df) { case (d, (src, canon)) =>
       if (srcCols.contains(src)) d
       else if (canon == "election_date")
-        d.withColumn(src,
-          coalesce(try_to_date(lit(src), "MM/dd/yyyy"), try_to_date(lit(src))))
+        d.withColumn(src, SchemaAlign.date(lit(src)))
       else d.withColumn(src, lit(src))
     }
     withConsts.select(colnames.map { case (src, canon) =>

@@ -81,4 +81,12 @@ class DistrictExtractSpec extends SparkSpec {
     val df = Seq(("a", "COURT DISTRICT 1")).toDF("id", "contest_name")
     assert(DistrictExtract.shouldExtract(df))
   }
+
+  test("gate: a typed (integer) district is read as text, not compared with \"\"") {
+    val some = Seq(("a", "US HOUSE DISTRICT 4", Some(4)), ("b", "US SENATE", None))
+      .toDF("id", "contest_name", "district")
+    assert(!DistrictExtract.shouldExtract(some))
+    val none = Seq(("a", "US HOUSE DISTRICT 4", Option.empty[Int])).toDF("id", "contest_name", "district")
+    assert(DistrictExtract.shouldExtract(none))
+  }
 }

@@ -31,6 +31,28 @@ class IngestJobSpec extends SparkSpec {
     assert(row.getAs[String]("candidate") === "Jane Doe") // Choice fallback
   }
 
+  test("digits-only district column lands: the gate sees it truthy, no CAST_INVALID_INPUT") {
+    val in = Files.createTempDirectory("graft_job_in").toFile
+    val out = Files.createTempDirectory("graft_job_out").toFile.getPath + "/contest"
+    Files.writeString(in.toPath.resolve("results.csv"),
+      "County,Contest Name,district\nWAKE,US HOUSE DISTRICT 4,4\n")
+    assert(IngestJob.run(spark, in.getPath, out, ContestSchema.precinct) === 1L)
+    val row = spark.read.parquet(out).head()
+    assert(row.getAs[String]("contest_name") === "US HOUSE DISTRICT 4") // not split
+    assert(row.getAs[String]("district") === "4")
+  }
+
+  test("NCSBE MM/dd/yyyy election dates land in their partition") {
+    val in = Files.createTempDirectory("graft_job_in").toFile
+    val out = Files.createTempDirectory("graft_job_out").toFile.getPath + "/contest"
+    Files.writeString(in.toPath.resolve("results.csv"),
+      "County,Election Date,Contest Name,Choice,Total Votes\nWAKE,11/06/2012,US SENATE,SMITH,10\n")
+    assert(IngestJob.run(spark, in.getPath, out, ContestSchema.precinct) === 1L)
+    val parts = new java.io.File(out).list().filter(_.startsWith("election_date="))
+    assert(parts.toSeq === Seq("election_date=2012-11-06"))
+    assert(spark.read.parquet(out).head().getAs[Long]("total_votes") === 10L)
+  }
+
   test("county materialization partitions by election_date and prunes") {
     val out = Files.createTempDirectory("graft_county").toFile.getPath + "/county"
     CountyRollup.materialize(ContestData.precinct(spark, "/root/testdata/sf0.001"), out)

@@ -67,13 +67,16 @@ class IngestSpec extends SparkSpec {
     val raw = RawReader.readDir(spark, dir.getPath)
     val m = graft.ops.FuzzyMatch.mapColumns(ContestSchema.precinctColumns, raw.columns.toSeq)
     assert(m("candidate") === "Choice") // fallback path
-    val normalized = Normalize(raw, m.map(_.swap).toSeq)
+    // (source → canonical) in schema order; a swapped map would keep only
+    // one canonical per source, and `Election Date` feeds two
+    val normalized = Normalize(raw, ContestSchema.precinctColumns.flatMap(c => m.get(c).map(_ -> c)))
     val extracted = graft.ops.DistrictExtract.withGate(normalized)
     val out = SchemaAlign(extracted, ContestSchema.precinct)
-    val rows = out.select("contest_name", "district", "candidate", "total_votes")
-      .collect().map(r => (r.get(0), r.get(1), r.get(2), r.get(3))).toSet
+    val rows = out.select("contest_name", "district", "candidate", "total_votes", "election_date")
+      .collect().map(r => (r.get(0), r.get(1), r.get(2), r.get(3), r.get(4))).toSet
+    val day = java.sql.Date.valueOf("2012-11-06") // NCSBE MM/dd/yyyy source text
     assert(rows === Set(
-      ("US HOUSE OF REPRESENTATIVES ", " 4", "Jane Doe", 1234L),
-      ("US SENATE", null, "John Roe", null)))
+      ("US HOUSE OF REPRESENTATIVES ", " 4", "Jane Doe", 1234L, day),
+      ("US SENATE", null, "John Roe", null, day)))
   }
 }

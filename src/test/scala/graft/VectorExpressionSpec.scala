@@ -32,6 +32,28 @@ class VectorExpressionSpec extends SparkSpec {
     both.foreach(r => assert(r.getLong(0) === r.getLong(1)))
   }
 
+  test("vec_qdot rounds exact negative halves away from zero, in eval and codegen") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.types.{ArrayType, FloatType}
+    import graft.functions.QuantizedDot
+    def arr(xs: Float*) = Literal.create(xs.toArray, ArrayType(FloatType, containsNull = false))
+    // −17/256 · 1e7 = −664062.5 exactly; 1e-7f quantizes to 1
+    val cases = Seq(
+      QuantizedDot(arr(-0.06640625f), arr(1e-7f)) -> -664063L,
+      QuantizedDot(arr(0.06640625f), arr(1e-7f)) -> 664063L,
+      QuantizedDot(arr(-0.06640625f, 0.06640625f), arr(-0.06640625f, 1e-7f)) ->
+        (664063L * 664063L + 664063L))
+    cases.foreach { case (e, want) =>
+      assert(e.eval(InternalRow.empty) === want)
+      assert(GenerateUnsafeProjection.generate(Seq(e)).apply(InternalRow.empty).getLong(0) === want)
+    }
+    // and the SQL round every oracle mirror uses agrees
+    assert(spark.sql("SELECT cast(round(cast(cast(-0.06640625 as float) as double) * 10000000) as bigint)")
+      .head().getLong(0) === -664063L)
+  }
+
   test("vec_sq8dot equals the HOF int8-clamp formulation and its codegen matches eval") {
     val e = Tables.embeddings(spark, "/root/testdata/sf0.001").limit(50)
     val both = e.select(
